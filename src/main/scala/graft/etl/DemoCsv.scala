@@ -59,8 +59,13 @@ object DemoCsv {
   def bestandsnaamCol(doosnummer: Column, volgnummer: Column): Column =
     format_string("%s_%s_%s.jpg",
       element_at(split(doosnummer, "-"), 1),
-      lpad(element_at(split(doosnummer, "-"), 2), 2, "0"),
-      lpad(volgnummer.cast("string"), 3, "0"))
+      zfill(element_at(split(doosnummer, "-"), 2), 2),
+      zfill(volgnummer.cast("string"), 3))
+
+  /** Python's `str.zfill`: left-pad with zeros only when shorter than
+    * `width` — Spark's `lpad` would truncate a longer value. */
+  private def zfill(s: Column, width: Int): Column =
+    when(length(s) < width, lpad(s, width, "0")).otherwise(s)
 
   /** The full pipeline. `vocab` is the J1 vocabulary snapshot (the
     * offline stand-in for the SPARQL endpoint; SURVEY §1.1 #8) in either

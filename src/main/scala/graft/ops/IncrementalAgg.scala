@@ -459,9 +459,7 @@ object IncrementalAgg {
     * dropping data. */
   private def claimStreamOwner(spark: SparkSession, table: String,
                                ckpt: String): Unit = {
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(table)).location)
+    val loc = graft.sources.Bucketed.spec(spark, table).location
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // qualify against the CHECKPOINT's own filesystem: '/tmp/ckpt',
     // 'file:/tmp/ckpt', and a relative spelling of the same directory

@@ -300,9 +300,7 @@ object Ivm {
     * no-op when caught up. */
   def refreshJoin(spark: SparkSession, a: String, b: String, on: String,
                   view: String): (Long, Long) = {
-    val viewCols = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(view))
-      .schema.fieldNames.toSeq
+    val viewCols = Bucketed.spec(spark, view).schema.fieldNames.toSeq
     def advance(src: String, side: Char, partner: DataFrame): Long =
       walkPairs(spark, src, side, view, view, "createJoin") { (x, y) =>
         val delta = Bucketed.diffGenerations(spark, src, x, y)
@@ -377,8 +375,7 @@ object Ivm {
   def refreshJoinLeft(spark: SparkSession, a: String, b: String,
                       on: String, view: String): (Long, Long) = {
     import org.apache.spark.sql.functions.lit
-    val viewSchema = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(view)).schema
+    val viewSchema = Bucketed.spec(spark, view).schema
     val viewCols = viewSchema.fieldNames.toSeq
     def walk(src: String, side: Char)(
         applyPair: (Long, Long) => Unit): Long =
@@ -588,8 +585,7 @@ object Ivm {
     val orphans = orphanTable(fullView)
     val gl = Bucketed.currentGeneration(spark, fullView)
     val go = Bucketed.currentGeneration(spark, orphans)
-    val leftSchema = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(fullView)).schema
+    val leftSchema = Bucketed.spec(spark, fullView).schema
     val base = Bucketed.loadAsOf(spark, fullView, gl)
       .select(col(groupCol), col(valueCol))
       .unionByName(
@@ -636,8 +632,7 @@ object Ivm {
                            retractBatch: (DataFrame, String) => Unit)
       : (Long, Long) = {
     val partials = s"${rollup}_partials"
-    val leftSchema = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(fullView)).schema
+    val leftSchema = Bucketed.spec(spark, fullView).schema
     val typeOf = leftSchema.fields.map(f => f.name -> f.dataType).toMap
     val selCols = cols.map(col)
     def advance(src: String, side: Char): Long =
@@ -676,8 +671,7 @@ object Ivm {
     val orphans = orphanTable(fullView)
     val gl = Bucketed.currentGeneration(spark, fullView)
     val go = Bucketed.currentGeneration(spark, orphans)
-    val leftSchema = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(fullView)).schema
+    val leftSchema = Bucketed.spec(spark, fullView).schema
     val sel = (groupCol +: valueCols).map(col)
     val base = Bucketed.loadAsOf(spark, fullView, gl).select(sel: _*)
       .unionByName(

@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.{BucketSpec, CatalogStorageFormat,
+  CatalogTable, CatalogTableType}
 
 /** Bucketed-table helpers — the zero-shuffle co-located join path the
   * scale notes promise (e.g. Relational.reconcile: "pre-bucket both
@@ -36,9 +38,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * inside the window can never observe a mixed generation OR a
   * FileNotFound. (At default retention 1 superseded files delete at
   * commit, so a frame held across a commit can hit the deleted file —
-  * retention is the concurrency dial.) The dir-scan read survives as
-  * [[loadDirect]], the documented opt-out, correct only at default
-  * retention because the dir holds multiple generations otherwise.
+  * retention is the concurrency dial.)
   * Crash windows serve the OLD generation intact — no duplicate-rows
   * window, no lost-rows window:
   *
@@ -51,10 +51,20 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *     header + `END &lt;count&gt;` trailer) and readers fall back to the
   *     previous generation.
   *
-  * Plain [[save]] appends stay safe during maintenance: an append's
-  * files join the manifest via its own commit (set-union under the
-  * in-process manifest lock), and reconciliation never deletes files
-  * while an append is in flight in this process.
+  * ONE WRITE PATH: every [[save]] — create, Overwrite, Append — writes
+  * its rows hash-clustered by the bucket function into a staging
+  * subdir, renames each file into the table dir under Spark's bucketed
+  * name (unlisted, so invisible), and commits the exact names as one
+  * manifest generation; maintenance rewrites ([[stageSwapCommit]])
+  * share the same clustered write. A create or Overwrite first drops
+  * the catalog entry and clears the location, commits generation 1 of
+  * the fresh table, and only then registers the entry — no reader ever
+  * resolves a half-written table. Appends stay safe during
+  * maintenance: an append's files join the manifest via its own commit
+  * (set-union under the in-process manifest lock), and reconciliation
+  * never deletes files while a write is in flight in this process.
+  * Where a table's location, schema, bucket spec and writer options
+  * come from is decided in one place, [[spec]].
   *
   * CONCURRENCY CONTRACT (single maintenance writer, ENFORCED): the
   * rewrite-based maintenance ops — [[compactBuckets]],
@@ -102,9 +112,40 @@ object Bucketed {
         f"[prof] $tag ${(System.nanoTime() - t0) / 1e6}%.1f ms")
     }
 
-  /** Save `df` as a bucketed, sorted managed table (default database).
-    * `buckets` should be sized so a bucket of the LARGER recurring join
-    * side fits an executor core's working set.
+  /** Where a governed table lives and how it is laid out: its location,
+    * schema, bucket spec and the parquet writer options every write
+    * re-applies (persisted as the catalog entry's storage properties,
+    * so maintenance rewrites keep e.g. bloom filters). */
+  private[graft] final case class TableSpec(
+      location: Path, schema: org.apache.spark.sql.types.StructType,
+      bucketSpec: Option[BucketSpec],
+      writeOptions: Map[String, String])
+
+  /** Resolve `table`'s [[TableSpec]] — the ONE place a table name turns
+    * into storage. Today the session catalog is the registry. */
+  private[graft] def spec(spark: SparkSession, table: String): TableSpec = {
+    val meta = spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table))
+    TableSpec(new Path(meta.location), meta.schema, meta.bucketSpec,
+      meta.storage.properties)
+  }
+
+  /** Save `df` as a bucketed, sorted managed table: `Overwrite` (the
+    * default) replaces the table, `Append` adds to it (creating it when
+    * it does not exist yet). `buckets` should be sized so a bucket of
+    * the LARGER recurring join side fits an executor core's working set.
+    *
+    * Every mode takes the same path (see the object scaladoc): a create
+    * or Overwrite drops any existing catalog entry and clears the
+    * table's default location — also an orphaned location a previous
+    * session left behind — and every per-location cache (generation
+    * numbering restarts at 1); an Append into an existing table checks
+    * the request against its bucket spec and columns. Then the rows are
+    * written clustered by the bucket function, renamed into the table
+    * dir under Spark's bucketed names, and committed as ONE manifest
+    * generation with their exact names; a created table is registered
+    * in the catalog (provider parquet, `writeOptions` as storage
+    * properties) only after that commit.
     *
     * WRITE-PARALLELISM CONTRACT (the hash-clustered write): every
     * commit clusters its rows by the bucket function, so one commit's
@@ -118,159 +159,127 @@ object Bucketed {
     * writes as that many clustered sub-waves — per-task input bounded
     * at batch/(buckets × subSplits) — committed as ONE atomic
     * generation with subSplits files per touched bucket (the next
-    * compaction restores one file per bucket). Ignored (must be 1
-    * makes no sense) outside the existing-table Append path; creates
-    * size `buckets` to the full table by contract.
-    *
-    * A previous SESSION's managed-table location can survive in the
-    * warehouse dir while the (in-memory) catalog entry did not —
-    * SaveMode.Overwrite only clears locations the catalog knows about,
-    * and Spark refuses to adopt an orphaned one
-    * (LOCATION_ALREADY_EXISTS). Drop + clear explicitly first. */
+    * compaction restores one file per bucket). */
   def save(df: DataFrame, table: String, keys: Seq[String],
            buckets: Int, mode: SaveMode = SaveMode.Overwrite,
            sortCols: Seq[String] = Nil,
            writeOptions: Map[String, String] = Map.empty,
            appendSubSplits: Int = 1): Unit = {
+    require(mode == SaveMode.Overwrite || mode == SaveMode.Append,
+      s"save supports SaveMode.Overwrite and SaveMode.Append, got $mode")
     require(appendSubSplits >= 1, "appendSubSplits must be >= 1")
-    val spark = df.sparkSession
     // malformed names fail loudly BEFORE any catalog/path work: one
-    // backtick pair around `db.tbl` would read as a single identifier,
-    // and a >2-part name can't resolve an orphan location
-    if (mode == SaveMode.Overwrite) {
-      val parts = table.split('.')
-      require(parts.length <= 2 && parts.forall(p => p.nonEmpty && !p.contains("`")),
-        s"expected an unqualified or db-qualified table name, got: $table")
+    // backtick pair around `db.tbl` would read as a single identifier
+    val parts = table.split('.')
+    require(parts.length <= 2 && parts.forall(p => p.nonEmpty && !p.contains("`")),
+      s"expected an unqualified or db-qualified table name, got: $table")
+    val spark = df.sparkSession
+    val catalog = spark.sessionState.catalog
+    val ident = {
+      val i = spark.sessionState.sqlParser.parseTableIdentifier(table)
+      i.copy(database = Some(i.database.getOrElse(catalog.getCurrentDatabase)))
     }
-    // Overwrite of an EXISTING table whose schema/bucket spec/options
-    // all match the request replaces CONTENTS in place (direct write +
-    // fresh generation-1 manifest) and skips the DROP TABLE + delete +
-    // saveAsTable DDL round-trip — ~120 ms of pure catalog fixed cost
-    // per rebuild, paid by every fixture that rebuilds its index each
-    // execution. Identical observable state: same rows, same layout,
-    // generation numbering restarted, every per-location cache
-    // invalidated. Any mismatch falls through to the full drop+create.
-    if (mode == SaveMode.Overwrite &&
-        overwriteInPlace(spark, table, df, keys, buckets,
-          if (sortCols.nonEmpty) sortCols else keys, writeOptions)) return
-    // destructive pre-clear ONLY under Overwrite — Append/Ignore/
-    // ErrorIfExists must keep their SaveMode contracts
-    if (mode == SaveMode.Overwrite) profPhase(s"save($table,$mode) preclear") {
-      // qualified names: quote each part separately (one backtick pair
-      // around `db.tbl` makes it a single identifier) and resolve the
-      // orphan location from the DATABASE's catalog location — the
-      // string-derived `<warehouse>/<table>` is wrong for any
-      // non-default database (`<warehouse>/<db>.db/<tbl>`) or a
-      // database created with a custom LOCATION
-      val parts = table.split('.')
-      require(parts.length <= 2 && parts.forall(p => p.nonEmpty && !p.contains("`")),
-        s"expected an unqualified or db-qualified table name, got: $table")
-      spark.sql(s"DROP TABLE IF EXISTS ${parts.map(p => s"`$p`").mkString(".")}")
-      val (db, tbl) =
-        if (parts.length == 2) (parts(0), parts(1))
-        else (spark.catalog.currentDatabase, parts(0))
-      if (spark.catalog.databaseExists(db)) {
-        val loc = new Path(
-          new Path(spark.catalog.getDatabase(db).locationUri),
-          tbl.toLowerCase(java.util.Locale.ROOT))
-        val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-        // a replaced table restarts its generation numbering, so every
-        // per-(location, generation) cache would otherwise serve the
-        // DEAD table's state under colliding keys
+    val sort = if (sortCols.nonEmpty) sortCols else keys
+    val exists = catalog.tableExists(ident)
+    val create = mode == SaveMode.Overwrite || !exists
+    val target =
+      if (create) profPhase(s"save($table,$mode) preclear") {
+        if (exists) {
+          catalog.refreshTable(ident)
+          catalog.dropTable(ident, ignoreIfNotExists = true, purge = false)
+        }
+        val loc = new Path(catalog.defaultTablePath(ident))
+        fileSystemOf(spark, loc).delete(loc, true)
         verifiedGenerations.remove(loc.toString)
         lastSeenGen.remove(loc.toString)
         invalidateSnapshots(loc.toString)
         FileStats.invalidate(loc.toString)
-      }
-    }
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val existedBefore = spark.sessionState.catalog.tableExists(ident)
-    def locOf: Path =
-      new Path(spark.sessionState.catalog.getTableMetadata(ident).location)
-    // the append commit adds (post-write listing − pre-write listing)
-    // to the manifest; capture the pre-write listing while the table
-    // still has only its committed files
-    val beforeNames: Set[String] = profPhase(s"save($table,$mode) prelist") {
-      if (mode == SaveMode.Append && existedBefore) {
-        val loc = locOf
-        dataFileNames(fileSystemOf(spark, loc), loc)
-      } else Set.empty
-    }
-    val guard = if (existedBefore) Some(locOf.toString) else None
-    guard.foreach { l => verifiedGenerations.remove(l); appendBegin(l) }
-    try {
-      val sort = if (sortCols.nonEmpty) sortCols else keys
-      if (mode == SaveMode.Append && existedBefore) {
-        // DIRECT append (round 15): an append into an existing bucketed
-        // table bypasses `saveAsTable` entirely — the catalog entry,
-        // schema and bucket spec already exist, and the measured cost
-        // of the `saveAsTable` machinery (DDL resolution, insert
-        // command, relation-cache refresh) was ~100–150 ms of the
-        // ~430 ms a few-hundred-row append paid, pure fixed cost per
-        // micro-batch commit. The batch is clustered and written as
-        // plain parquet to a staging subdir, each file is renamed into
-        // the table dir under Spark's own bucketed-file naming (the
-        // clustering makes partition index == bucket id, so the name
-        // is derivable), and the manifest commit adds the EXACT staged
-        // names — no listing diff needed. Same rows, same layout, same
-        // generation sequence as the saveAsTable path it replaces.
-        appendDirect(spark, table, df, keys, buckets, sort, writeOptions,
-          beforeNames, appendSubSplits)
+        TableSpec(loc, df.schema.toNullable,
+          Some(BucketSpec(buckets, keys, sort)), writeOptions)
       } else {
-      // Cluster rows by the bucket function BEFORE the bucketed write
-      // (guide §6 / Iceberg write.distribution-mode=hash): Spark's
-      // bucketBy writer emits one file per (task × bucket-present), so
-      // an un-clustered write fans out up to tasks×buckets small files
-      // PER COMMIT — the append-heavy index families were measured at
-      // ~283 files after one q151 fixture run, and every later read,
-      // footer stamp, manifest listing and compaction pays for them.
-      // repartition(buckets, keys) uses the SAME HashPartitioning
-      // (pmod(murmur3, n)) as the bucket-id assignment, so each task
-      // holds exactly one bucket: one file per non-empty bucket per
-      // commit, the layout stageSwapCommit already enforces for
-      // maintenance rewrites. Row sets (and therefore every query
-      // result) are unchanged; a caller's own repartition collapses
-      // into this one (CollapseRepartition).
-      val clustered = {
-        import org.apache.spark.sql.functions.col
-        df.repartition(buckets, keys.map(col): _*)
+        val t = spec(spark, table)
+        val bs = t.bucketSpec.getOrElse(
+          throw new IllegalArgumentException(s"$table is not bucketed"))
+        require(bs.numBuckets == buckets && bs.bucketColumnNames == keys,
+          s"append bucket spec (${keys.mkString(",")} x $buckets) does not " +
+            s"match $table's (${bs.bucketColumnNames.mkString(",")} x " +
+            s"${bs.numBuckets})")
+        // by-name append against the table's schema
+        require(df.columns.toSet == t.schema.fieldNames.toSet,
+          s"append columns [${df.columns.sorted.mkString(",")}] do not match " +
+            s"$table's schema [${t.schema.fieldNames.sorted.mkString(",")}]")
+        t
       }
-      // writeOptions reach the parquet writer (e.g.
-      // `parquet.bloom.filter.enabled#col` for [[FileStats.loadEquals]]
-      // pruning) AND persist as table storage properties, so
-      // maintenance rewrites ([[stageSwapCommit]]) re-apply them — a
-      // compacted or merged file keeps its blooms
-      profPhase(s"save($table,$mode) write") {
-        clustered.write.mode(mode)
-          .options(writeOptions)
-          .bucketBy(buckets, keys.head, keys.tail: _*)
-          .sortBy(sort.head, sort.tail: _*)
-          .format("parquet")
-          .saveAsTable(table)
-      }
-      if (!(mode == SaveMode.Ignore && existedBefore)) {
-        val loc = locOf
-        val fs = fileSystemOf(spark, loc)
-        profPhase(s"save($table,$mode) commit") { withManifestLock(loc.toString) {
-          val names = dataFileNames(fs, loc)
-          // every mode reaching here wrote into a fresh or pre-cleared
-          // dir (appends into an EXISTING table take [[appendDirect]];
-          // an Append that CREATED the table is a create, as before):
-          // dir == manifest
-          val gen = writeNextManifest(fs, loc, names, op = "create",
-            prevNames = Some(Set.empty))
-          verifiedGenerations.put(loc.toString, gen)
-        } }
-        // commit-time sidecar stamping (opt-in, marker-gated, outside
-        // the lock): the committer footer-reads only its new files so
-        // the first reader pays zero footer opens
+    val loc = target.location
+    val fs = fileSystemOf(spark, loc)
+    // an append commits (manifest ∪ its files); the pre-write listing is
+    // the base of a pre-manifest table and tells orphans from history
+    val beforeNames =
+      if (create) Set.empty[String]
+      else profPhase(s"save($table,$mode) prelist") { dataFileNames(fs, loc) }
+    verifiedGenerations.remove(loc.toString)
+    appendBegin(loc.toString)
+    try {
+      val stage = new Path(loc,
+        s"_graft_append_stage-${java.util.UUID.randomUUID()}")
+      try {
+        // appendSubSplits > 1 = the oversized-append split (see the
+        // write-parallelism contract): the batch is sliced by a
+        // deterministic hash of the bucket keys into subSplits clustered
+        // sub-writes — each wave's tasks sort 1/subSplits of the batch —
+        // all committed below as ONE atomic generation
+        val newNames =
+          (0 until appendSubSplits).flatMap { i =>
+            val slice =
+              if (appendSubSplits == 1) df
+              else {
+                import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+                df.filter(pmod(xxhash64(keys.map(col): _*),
+                  lit(appendSubSplits.toLong)) === i.toLong)
+              }
+            val waveStage =
+              if (appendSubSplits == 1) stage else new Path(stage, s"wave$i")
+            writeClustered(slice, target.schema, keys, buckets, sort,
+              writeOptions, fs, waveStage, renameInto = Some(loc))
+          }.map(_._1).toSet
+        profPhase(s"save($table,$mode) commit") {
+          withManifestLock(loc.toString) {
+            val base =
+              if (create) Set.empty[String]
+              else readManifest(fs, loc).map(_._2).getOrElse(beforeNames)
+            val gen = writeNextManifest(fs, loc, base ++ newNames,
+              op = if (create) "create" else "append", prevNames = Some(base))
+            // verified only if the PRE-append dir carried no unlisted
+            // orphans (an append into a crashed-and-never-reloaded table
+            // must not mark the orphans clean — the next load's recovery
+            // pass reconciles them). Files an older RETAINED generation
+            // lists are in-place-retired history, not orphans.
+            val unexplained = beforeNames -- base
+            if (unexplained.isEmpty ||
+                (retentionOf(fs, loc) > 1 &&
+                  (unexplained -- retainedElsewhere(fs, loc, gen)).isEmpty))
+              verifiedGenerations.put(loc.toString, gen)
+          }
+        }
+        if (create)
+          catalog.createTable(
+            CatalogTable(
+              identifier = ident,
+              tableType = CatalogTableType.MANAGED,
+              storage = CatalogStorageFormat.empty
+                .copy(locationUri = Some(loc.toUri), properties = writeOptions),
+              schema = target.schema,
+              provider = Some("parquet"),
+              bucketSpec = target.bucketSpec),
+            ignoreIfExists = false, validateLocation = false)
+        // the catalog relation cache (and any cached data) must not keep
+        // the previous file listing or the replaced table's relation
+        spark.catalog.refreshTable(table)
         profPhase(s"save($table,$mode) stamp") {
           FileStats.stampIfEnabled(spark, table, loc)
         }
-      }
-      }
-    } finally guard.foreach(appendEnd)
+      } finally { fs.delete(stage, true); () }
+    } finally appendEnd(loc.toString)
   }
 
   /** Staged plain-parquet file name → the same name under Spark's
@@ -292,9 +301,9 @@ object Bucketed {
 
   /** Write `df` bucket-clustered and sorted as plain parquet into a
     * staging subdir of `dir`, then rename each committed file to its
-    * bucketed name — the shared write half of [[appendDirect]] and
+    * bucketed name — the shared write half of [[save]] and
     * [[stageSwapCommit]]. With `renameInto = Some(dir)` the files move
-    * straight into the table dir (append path — unlisted, so invisible
+    * straight into the table dir ([[save]] — unlisted, so invisible
     * until the manifest commit); with None they stay in the staging
     * dir under their bucketed names (rewrite path — the CAS-checked
     * commit renames them under the manifest lock). Returns the
@@ -325,140 +334,6 @@ object Bucketed {
       }
   }
 
-  /** [[save]]'s Overwrite fast path: when the existing table's
-    * provider, bucket spec, column names+types (nullability-insensitive
-    * — the write aligns/casts to the CATALOG schema either way) and
-    * requested writer options already match, replace the table's
-    * CONTENTS without touching the catalog: clear the dir (data,
-    * manifests, history, markers — the same reset the drop+delete path
-    * produced, so generation numbering restarts at 1), direct-write the
-    * clustered rows, commit a fresh `create` manifest. Returns false —
-    * caller falls back to the full drop+recreate — on any mismatch. */
-  private def overwriteInPlace(spark: SparkSession, table: String,
-                               df: DataFrame, keys: Seq[String],
-                               buckets: Int, sort: Seq[String],
-                               writeOptions: Map[String, String]): Boolean = {
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    if (!spark.sessionState.catalog.tableExists(ident)) return false
-    val meta = spark.sessionState.catalog.getTableMetadata(ident)
-    val compatible =
-      meta.provider.exists(_.equalsIgnoreCase("parquet")) &&
-        meta.bucketSpec.exists(s => s.numBuckets == buckets &&
-          s.bucketColumnNames == keys && s.sortColumnNames == sort) &&
-        meta.schema.fields.toSeq.map(f => (f.name, f.dataType.catalogString)) ==
-          df.schema.fields.toSeq.map(f => (f.name, f.dataType.catalogString)) &&
-        writeOptions.forall { case (k, v) =>
-          meta.storage.properties.get(k).contains(v) }
-    if (!compatible) return false
-    profPhase(s"save($table,Overwrite) in-place") {
-      val loc = new Path(meta.location)
-      val fs = fileSystemOf(spark, loc)
-      // cache hygiene identical to the drop path: the replace restarts
-      // generation numbering, so stale per-(location, generation)
-      // entries would serve the dead table's state under colliding keys
-      verifiedGenerations.remove(loc.toString)
-      lastSeenGen.remove(loc.toString)
-      invalidateSnapshots(loc.toString)
-      FileStats.invalidate(loc.toString)
-      appendBegin(loc.toString)
-      try {
-        if (fs.exists(loc))
-          fs.listStatus(loc).foreach(s => fs.delete(s.getPath, true))
-        else fs.mkdirs(loc)
-        val stage = new Path(loc,
-          s"_graft_append_stage-${java.util.UUID.randomUUID()}")
-        try {
-          val newNames = writeClustered(df, meta.schema, keys, buckets,
-            sort, writeOptions, fs, stage, renameInto = Some(loc))
-            .map(_._1).toSet
-          withManifestLock(loc.toString) {
-            val gen = writeNextManifest(fs, loc, newNames, op = "create",
-              prevNames = Some(Set.empty))
-            verifiedGenerations.put(loc.toString, gen)
-          }
-          spark.catalog.refreshTable(table)
-          FileStats.stampIfEnabled(spark, table, loc)
-        } finally { fs.delete(stage, true); () }
-      } finally appendEnd(loc.toString)
-    }
-    true
-  }
-
-  /** [[save]]'s Append fast path into an EXISTING table — plain
-    * clustered parquet write + bucketed rename + manifest commit with
-    * the exact staged names. Crash behavior is the append contract
-    * unchanged: files land in the dir UNLISTED (invisible to every
-    * manifest-resolved read) and join the manifest in one atomic
-    * generation create; a crash before the commit leaves them as
-    * reconcilable orphans, the old generation served. */
-  private def appendDirect(spark: SparkSession, table: String,
-                           df: DataFrame, keys: Seq[String], buckets: Int,
-                           sort: Seq[String],
-                           writeOptions: Map[String, String],
-                           beforeNames: Set[String],
-                           subSplits: Int = 1): Unit = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(
-      throw new IllegalArgumentException(s"$table is not bucketed"))
-    require(spec.numBuckets == buckets && spec.bucketColumnNames == keys,
-      s"append bucket spec (${keys.mkString(",")} x $buckets) does not " +
-        s"match $table's (${spec.bucketColumnNames.mkString(",")} x " +
-        s"${spec.numBuckets})")
-    // by-name append against the table's schema — the same resolution
-    // (and the same mismatch error) the saveAsTable path enforced
-    require(df.columns.toSet == meta.schema.fieldNames.toSet,
-      s"append columns [${df.columns.sorted.mkString(",")}] do not match " +
-        s"$table's schema [${meta.schema.fieldNames.sorted.mkString(",")}]")
-    val loc = new Path(meta.location)
-    val fs = fileSystemOf(spark, loc)
-    val stage = new Path(loc,
-      s"_graft_append_stage-${java.util.UUID.randomUUID()}")
-    try {
-      // subSplits > 1 = the oversized-append split (see [[save]]'s
-      // write-parallelism contract): the batch is sliced by a
-      // deterministic hash of the bucket keys into subSplits clustered
-      // sub-writes — each wave's tasks sort 1/subSplits of the batch —
-      // all committed below as ONE atomic generation
-      val newNames =
-        (0 until subSplits).flatMap { i =>
-          val slice =
-            if (subSplits == 1) df
-            else {
-              import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-              df.filter(pmod(xxhash64(keys.map(col): _*),
-                lit(subSplits.toLong)) === i.toLong)
-            }
-          val waveStage =
-            if (subSplits == 1) stage else new Path(stage, s"wave$i")
-          writeClustered(slice, meta.schema, keys, buckets, sort,
-            writeOptions, fs, waveStage, renameInto = Some(loc))
-        }.map(_._1).toSet
-      profPhase(s"save($table,Append) commit") {
-        withManifestLock(loc.toString) {
-          val base = readManifest(fs, loc).map(_._2).getOrElse(beforeNames)
-          val gen = writeNextManifest(fs, loc, base ++ newNames,
-            prevNames = Some(base))
-          // verified only if the PRE-append dir carried no unlisted
-          // orphans (an append into a crashed-and-never-reloaded table
-          // must not mark the orphans clean — the next load's recovery
-          // pass reconciles them). Files an older RETAINED generation
-          // lists are in-place-retired history, not orphans.
-          val unexplained = beforeNames -- base
-          if (unexplained.isEmpty ||
-              (retentionOf(fs, loc) > 1 &&
-                (unexplained -- retainedElsewhere(fs, loc, gen)).isEmpty))
-            verifiedGenerations.put(loc.toString, gen)
-        }
-      }
-      // saveAsTable refreshed the catalog relation cache as a side
-      // effect; the direct path must too, or a dir-scan reader
-      // ([[loadDirect]] / spark.table) would keep a stale file listing
-      spark.catalog.refreshTable(table)
-      FileStats.stampIfEnabled(spark, table, loc)
-    } finally { fs.delete(stage, true); () }
-  }
-
   /** The table as a DataFrame, SNAPSHOT-resolved through its
     * generation manifest: the returned frame reads an EXPLICIT file
     * list (the head generation's, pinned at load time) carried
@@ -487,15 +362,13 @@ object Bucketed {
     * the manifest lock. With an append in flight (no verified head)
     * the read still resolves through the manifest's last committed
     * generation; only a table with NO manifest at all (pre-manifest
-    * layout) is served as the directory scan ([[loadDirect]] — the
-    * documented opt-out). */
+    * layout) is served as the directory scan. */
   def load(spark: SparkSession, table: String): DataFrame = {
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val meta = spark.sessionState.catalog.getTableMetadata(ident)
-    val loc = new Path(meta.location)
+    val t = spec(spark, table)
+    val loc = t.location
     verifyOnce(spark, table, loc)
     val gen = verifiedGenerations.getOrDefault(loc.toString, -1L)
-    if (gen >= 0L) snapshotFrame(spark, table, meta, loc, gen)
+    if (gen >= 0L) snapshotFrame(spark, table, t, gen)
     else {
       // no verified head — an append is in flight (its files are
       // legitimately unlisted until its commit) or the table was never
@@ -509,26 +382,10 @@ object Bucketed {
       // uncommitted files.
       val fs = fileSystemOf(spark, loc)
       withManifestLock(loc.toString) { readManifest(fs, loc) } match {
-        case Some((g, _)) => snapshotFrame(spark, table, meta, loc, g)
+        case Some((g, _)) => snapshotFrame(spark, table, t, g)
         case None => spark.table(table)
       }
     }
-  }
-
-  /** The DIRECTORY-scan read (`spark.table`) behind the same
-    * verify+reconcile pass — the opt-out from [[load]]'s
-    * snapshot-resolved default for callers that specifically want the
-    * catalog relation (it retimes to whatever generation is current
-    * at each evaluation). Only correct under default retention:
-    * with [[setRetention]] > 1 superseded generations' files stay in
-    * the directory (unlisted) and a dir scan would read them as live
-    * rows. */
-  def loadDirect(spark: SparkSession, table: String): DataFrame = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    val loc = new Path(meta.location)
-    verifyOnce(spark, table, loc)
-    spark.table(table)
   }
 
   /** [[load]]'s cold path: verify manifest↔disk agreement, reconcile
@@ -608,8 +465,8 @@ object Bucketed {
     * serving fewer files than the manifest lists would be a
     * lost-rows read. */
   private def snapshotFrame(spark: SparkSession, table: String,
-                            meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
-                            loc: Path, gen: Long): DataFrame = {
+                            t: TableSpec, gen: Long): DataFrame = {
+    val loc = t.location
     // hot path = ONE map get; the sweep (superseded generations of
     // this location, stopped sessions' frames) runs only on a miss —
     // i.e. once per commit per table, not per load
@@ -645,11 +502,11 @@ object Bucketed {
         val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
           new ExplicitFileIndex(files),
           partitionSchema = new org.apache.spark.sql.types.StructType(),
-          dataSchema = meta.schema,
-          bucketSpec = meta.bucketSpec,
+          dataSchema = t.schema,
+          bucketSpec = t.bucketSpec,
           fileFormat =
             new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
-          options = meta.storage.properties)(spark)
+          options = t.writeOptions)(spark)
         spark.baseRelationToDataFrame(rel)
       })).value
   }
@@ -878,9 +735,7 @@ object Bucketed {
     spark.catalog.refreshTable(table)
     // schema changed but the generation did not: cached snapshot
     // frames carry the OLD schema and must rebuild on next load
-    invalidateSnapshots(new Path(spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser
-        .parseTableIdentifier(table)).location).toString)
+    invalidateSnapshots(spec(spark, table).location.toString)
   }
 
   /** Row-level CDC APPLY — replays a [[diffGenerations]] delta onto a
@@ -914,12 +769,10 @@ object Bucketed {
     }
 
   private def withMaintenanceLock[A](spark: SparkSession, table: String)(
-      body: (org.apache.spark.sql.catalyst.catalog.CatalogTable, Path,
-             FileSystem) => A): A = {
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val meta = spark.sessionState.catalog.getTableMetadata(ident)
+      body: (TableSpec, Path, FileSystem) => A): A = {
+    val meta = spec(spark, table)
     require(meta.bucketSpec.isDefined, s"$table is not bucketed")
-    val dir = new Path(meta.location)
+    val dir = meta.location
     val fs = fileSystemOf(spark, dir)
     // single-maintenance-writer guard (see the object scaladoc):
     // acquired before the file listing — the listing is part of the
@@ -957,7 +810,7 @@ object Bucketed {
       _ => new java.util.concurrent.locks.ReentrantLock())
 
   private def rewriteLocked(spark: SparkSession, table: String,
-                            meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
+                            meta: TableSpec,
                             dir: Path, fs: FileSystem,
                             select: Seq[FileStatus] => Boolean,
                             bucketIds: Option[Set[Int]],
@@ -1045,7 +898,7 @@ object Bucketed {
     * after it, the new generation is served and the old files are the
     * orphans. Returns the number of staged data files. */
   private def stageSwapCommit(spark: SparkSession, table: String,
-                              meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
+                              meta: TableSpec,
                               dir: Path, fs: FileSystem, rows: DataFrame,
                               oldFiles: Seq[FileStatus],
                               legacyBase: Set[String],
@@ -1055,18 +908,12 @@ object Bucketed {
     // carry the table's parquet writer options (bloom filters etc.)
     // into the staging write: a maintenance rewrite must not silently
     // strip the file features reads prune on
-    val parquetOpts = meta.storage.properties
+    val parquetOpts = meta.writeOptions
       .filter { case (k, _) => k.startsWith("parquet.") }
-    // DIRECT staging write (round 15): the new generation's rows are
-    // clustered and written as plain parquet into a staging SUBDIR of
-    // the table dir, then renamed under Spark's bucketed naming —
-    // replacing the former `<table>__rewrite` staging TABLE, whose
-    // catalog lifecycle (create + saveAsTable + drop, plus the staging
-    // table's own manifest commit) was ~200 ms of pure fixed cost per
-    // rewrite on top of the identical data write. Same clustering
-    // (partition index == bucket id), same sort, same one-manifest-PUT
-    // commit, same crash windows: staged files stay invisible until
-    // the rename+commit below.
+    // the new generation's rows are clustered and written as plain
+    // parquet into a staging SUBDIR of the table dir, under Spark's
+    // bucketed naming (partition index == bucket id): staged files stay
+    // invisible until the rename+commit below.
     val stage = new Path(dir,
       s"_graft_rewrite_stage-${java.util.UUID.randomUUID()}")
     val nNew =
@@ -1256,8 +1103,7 @@ object Bucketed {
 
   private[sources] def historyRecords(spark: SparkSession, table: String)
       : Seq[(Long, String, String, Int, Int)] = {
-    val loc = new Path(spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).location)
+    val loc = spec(spark, table).location
     val fs = fileSystemOf(spark, loc)
     val hd = historyDir(loc)
     if (!fs.exists(hd)) Seq.empty
@@ -1324,8 +1170,7 @@ object Bucketed {
     * identically. Returns the number of records folded (0 = no-op). */
   def foldHistory(spark: SparkSession, table: String,
                   ifMoreThan: Int = 0): Int = {
-    val loc = new Path(spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).location)
+    val loc = spec(spark, table).location
     val fs = fileSystemOf(spark, loc)
     val hd = historyDir(loc)
     if (!fs.exists(hd)) return 0
@@ -1385,8 +1230,7 @@ object Bucketed {
     * op. */
   def setRetention(spark: SparkSession, table: String, n: Int): Unit = {
     require(n >= 1, "retention must be >= 1 generation")
-    val loc = new Path(spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).location)
+    val loc = spec(spark, table).location
     val fs = fileSystemOf(spark, loc)
     withManifestLock(loc.toString) {
       writeMarker(fs, loc, RetentionName, RetentionMagic, n.toString)
@@ -1438,8 +1282,7 @@ object Bucketed {
   def ensureRetentionAtLeast(spark: SparkSession, table: String,
                              n: Int): Unit = {
     require(n >= 1, "retention must be >= 1 generation")
-    val loc = new Path(spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).location)
+    val loc = spec(spark, table).location
     val fs = fileSystemOf(spark, loc)
     withManifestLock(loc.toString) {
       if (retentionOf(fs, loc) < n)
@@ -1456,9 +1299,9 @@ object Bucketed {
     * racing commits: a move would break the explicit paths an
     * in-flight scan resolved. The directory therefore holds MULTIPLE
     * generations when retention > 1 — fine for every manifest-resolved
-    * read, and exactly why the dir-scan ([[loadDirect]]) is only
-    * correct at default retention. With retention 1, superseded files
-    * delete at commit (the single-generation-dir invariant holds). */
+    * read; a plain directory scan is only correct at default
+    * retention. With retention 1, superseded files delete at commit
+    * (the single-generation-dir invariant holds). */
   private def retireFiles(fs: FileSystem, dir: Path, names: Seq[String],
                           retention: Int): Unit =
     if (names.nonEmpty && retention <= 1)
@@ -1518,8 +1361,7 @@ object Bucketed {
     * crashed op's staging awaits the next load()/maintenance
     * reconcile. */
   def describe(spark: SparkSession, table: String): TableState = {
-    val loc = new Path(spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).location)
+    val loc = spec(spark, table).location
     val fs = fileSystemOf(spark, loc)
     withManifestLock(loc.toString) {
       val entries = manifestEntries(fs, loc)
@@ -1556,8 +1398,7 @@ object Bucketed {
   /** The table's readable generations, oldest first — every manifest
     * still on disk that parses as valid. */
   def generations(spark: SparkSession, table: String): Seq[Long] = {
-    val loc = new Path(spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).location)
+    val loc = spec(spark, table).location
     val fs = fileSystemOf(spark, loc)
     withManifestLock(loc.toString) {
       manifestEntries(fs, loc)
@@ -1579,9 +1420,8 @@ object Bucketed {
     * consumers — do not need co-located joins; the head-generation
     * [[load]] keeps the bucket spec). */
   def loadAsOf(spark: SparkSession, table: String, gen: Long): DataFrame = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    val dir = new Path(meta.location)
+    val meta = spec(spark, table)
+    val dir = meta.location
     val fs = fileSystemOf(spark, dir)
     val paths = withManifestLock(dir.toString) {
       resolvePaths(fs, dir, table, gen,
@@ -1662,12 +1502,11 @@ object Bucketed {
     * NEWER generation than it asked for — the mixed-pair window the
     * pair pointer exists to close. */
   def loadAt(spark: SparkSession, table: String, gen: Long): DataFrame = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    val loc = new Path(meta.location)
+    val meta = spec(spark, table)
+    val loc = meta.location
     verifyOnce(spark, table, loc)
     if (verifiedGenerations.getOrDefault(loc.toString, -1L) == gen)
-      snapshotFrame(spark, table, meta, loc, gen)
+      snapshotFrame(spark, table, meta, gen)
     else if (gen == 0L &&
         withManifestLock(loc.toString) {
           readManifest(fileSystemOf(spark, loc), loc)
@@ -1702,8 +1541,7 @@ object Bucketed {
   private[graft] def writePairPointer(spark: SparkSession, owner: String,
                                       ownerGen: Long,
                                       companionGen: Long): Unit = {
-    val dir = new Path(spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(owner)).location)
+    val dir = spec(spark, owner).location
     val fs = fileSystemOf(spark, dir)
     withManifestLock(dir.toString) {
       writeMarker(fs, dir, PairName, PairMagic, s"$ownerGen $companionGen")
@@ -1721,8 +1559,7 @@ object Bucketed {
     * generation), absent when never written or torn. */
   private[graft] def readPairPointer(spark: SparkSession,
                                      owner: String): Option[(Long, Long)] = {
-    val dir = new Path(spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(owner)).location)
+    val dir = spec(spark, owner).location
     val fs = fileSystemOf(spark, dir)
     readMarker(fs, dir, PairName, PairMagic).flatMap(parsePairValue)
   }
@@ -1740,9 +1577,8 @@ object Bucketed {
   def diffGenerations(spark: SparkSession, table: String,
                       fromGen: Long, toGen: Long): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    val dir = new Path(meta.location)
+    val meta = spec(spark, table)
+    val dir = meta.location
     val fs = fileSystemOf(spark, dir)
     val (fromPaths, toPaths) = withManifestLock(dir.toString) {
       val from = listedOf(fs, dir, table, fromGen)
@@ -2020,8 +1856,7 @@ object Bucketed {
     * table): a map lookup when this process has verified the table,
     * one manifest read under the lock otherwise. */
   def currentGeneration(spark: SparkSession, table: String): Long = {
-    val loc = new Path(spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).location)
+    val loc = spec(spark, table).location
     val key = loc.toString
     // one getOrDefault, not containsKey-then-get: a concurrent
     // maintenance/append start removes the entry between the two
@@ -2045,9 +1880,8 @@ object Bucketed {
     * the dir (generation 0). */
   private[sources] def currentDataFiles(
       spark: SparkSession, table: String): (Long, Seq[FileStatus]) = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    val dir = new Path(meta.location)
+    val meta = spec(spark, table)
+    val dir = meta.location
     val fs = fileSystemOf(spark, dir)
     withManifestLock(dir.toString) {
       readManifest(fs, dir) match {
@@ -2064,8 +1898,7 @@ object Bucketed {
     * Returns the generation planted. */
   private[graft] def plantForeignCommit(spark: SparkSession,
                                         table: String): Long = {
-    val loc = new Path(spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).location)
+    val loc = spec(spark, table).location
     val fs = fileSystemOf(spark, loc)
     val names = readManifest(fs, loc).map(_._2)
       .getOrElse(dataFileNames(fs, loc))

@@ -114,8 +114,7 @@ object FileStats {
   def statsOf(spark: SparkSession,
               table: String): Map[String, FileStat] = {
     val (gen, files) = Bucketed.currentDataFiles(spark, table)
-    val loc = new Path(spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).location)
+    val loc = Bucketed.spec(spark, table).location
     // a run-forever process commits thousands of generations; stats of
     // superseded ones are dead weight — keep only the head's per table
     cache.keySet.removeIf(k => k._1 == loc.toString && k._2 != gen)
@@ -239,8 +238,7 @@ object FileStats {
     val scanned =
       if (toScan.isEmpty) 0L
       else {
-        val schema = spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(table)).schema
+        val schema = Bucketed.spec(spark, table).schema
         spark.read.schema(schema).parquet(toScan: _*)
           .filter(col(column).between(lit(lo), lit(hi))).count()
       }
@@ -266,8 +264,7 @@ object FileStats {
   def loadWhere(spark: SparkSession, table: String,
                 ranges: Seq[(String, Any, Any)]): DataFrame = {
     require(ranges.nonEmpty, "at least one (column, lo, hi) range")
-    val schema = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).schema
+    val schema = Bucketed.spec(spark, table).schema
     val kept = ranges.map { case (c, lo, hi) =>
       splitFiles(spark, table, c, lo, hi)._1.map(_.toString).toSet
     }.reduce(_ intersect _)
@@ -296,8 +293,7 @@ object FileStats {
     * re-applies to the survivors. */
   def loadEquals(spark: SparkSession, table: String, column: String,
                  value: Any): DataFrame = {
-    val schema = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).schema
+    val schema = Bucketed.spec(spark, table).schema
     val (surviving, _) = splitFilesEquals(spark, table, column, value)
     val base =
       if (surviving.isEmpty)
@@ -444,8 +440,7 @@ object FileStats {
     if (toScan.isEmpty)
       (provenMin.map(fromKey(_, lo)), provenMax.map(fromKey(_, lo)))
     else {
-      val schema = spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(table)).schema
+      val schema = Bucketed.spec(spark, table).schema
       import org.apache.spark.sql.functions.{max => smax, min => smin}
       val r = spark.read.schema(schema)
         .parquet(toScan.map(_.toString): _*)
@@ -529,8 +524,7 @@ object FileStats {
     import org.apache.spark.sql.functions.{asc, asc_nulls_last, desc}
     val stats = statsOf(spark, table)
     val (_, allFiles) = Bucketed.currentDataFiles(spark, table)
-    val schema = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).schema
+    val schema = Bucketed.spec(spark, table).schema
     val files = range match {
       case Some((rc, lo, hi)) =>
         val keptNames = splitFiles(spark, table, rc, lo, hi)._1
@@ -699,8 +693,7 @@ object FileStats {
     * DERIVED metadata — a failed stamp degrades to write-behind,
     * never fails the commit. */
   def enableCommitStamping(spark: SparkSession, table: String): Unit = {
-    val loc = new Path(spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).location)
+    val loc = Bucketed.spec(spark, table).location
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     Bucketed.writeMarker(fs, loc, StampName, StampMagic, "1")
   }
@@ -739,8 +732,7 @@ object FileStats {
     * (name listing + one small parse), no footer is opened. */
   private[sources] def sidecarGeneration(spark: SparkSession,
                                          table: String): Option[Long] = {
-    val loc = new Path(spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).location)
+    val loc = Bucketed.spec(spark, table).location
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     readSidecar(fs, loc)._1
   }
@@ -983,8 +975,7 @@ object FileStats {
                         column: String, lo: Any,
                         hi: Any): (Option[Key], Option[Key]) = {
     import org.apache.spark.sql.types._
-    val dt = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
+    val dt = Bucketed.spec(spark, table)
       .schema.fields.find(_.name == column).map(_.dataType)
     def ok(v: Any): Boolean = (dt, v) match {
       case (Some(_: ByteType | _: ShortType | _: IntegerType |

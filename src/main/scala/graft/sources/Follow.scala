@@ -28,8 +28,7 @@ object Follow {
 
   private def hostDir(spark: SparkSession,
                       host: String): (FileSystem, Path) = {
-    val dir = new Path(spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(host)).location)
+    val dir = Bucketed.spec(spark, host).location
     (dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
   }
 

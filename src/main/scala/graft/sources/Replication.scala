@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** RESUMABLE incremental table replication on the bucketed contract —
@@ -46,8 +45,7 @@ object Replication {
   def bootstrap(spark: SparkSession, source: String, replica: String,
                 buckets: Int): Long = {
     val gen = Bucketed.currentGeneration(spark, source)
-    val keys = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(source))
+    val keys = Bucketed.spec(spark, source)
       .bucketSpec.map(_.bucketColumnNames).getOrElse(
         throw new IllegalArgumentException(s"$source is not bucketed"))
     Bucketed.save(Bucketed.loadAsOf(spark, source, gen), replica,
@@ -60,7 +58,7 @@ object Replication {
     * ever bootstrapped/synced (a torn marker reads as absent — the
     * caller must re-bootstrap, never silently re-sync from 0). */
   def bookmark(spark: SparkSession, replica: String): Option[Long] = {
-    val dir = locationOf(spark, replica)
+    val dir = Bucketed.spec(spark, replica).location
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     Bucketed.readMarker(fs, dir, SyncName, SyncMagic)
       .flatMap(_.toLongOption)
@@ -107,12 +105,8 @@ object Replication {
     * table that tracks a source generation can carry one). */
   private[graft] def writeBookmark(spark: SparkSession, replica: String,
                                    gen: Long): Unit = {
-    val dir = locationOf(spark, replica)
+    val dir = Bucketed.spec(spark, replica).location
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     Bucketed.writeMarker(fs, dir, SyncName, SyncMagic, gen.toString)
   }
-
-  private def locationOf(spark: SparkSession, table: String): Path =
-    new Path(spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).location)
 }

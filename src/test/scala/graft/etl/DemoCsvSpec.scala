@@ -79,6 +79,15 @@ class DemoCsvSpec extends graft.SparkSuite {
     assert(serieSubjects.toSeq == Seq(2L, 11L, 20L))
   }
 
+  test("M3 filename pads like zfill: item 1000 and a 3-digit box keep every digit") {
+    import spark.implicits._
+    val names = Seq(("1984-1", 7), ("1984-12", 42), ("1984-123", 1000))
+      .toDF("doos", "volg")
+      .select(DemoCsv.bestandsnaamCol(col("doos"), col("volg")))
+      .as[String].collect().toSeq
+    assert(names == Seq("1984_01_007.jpg", "1984_12_042.jpg", "1984_123_1000.jpg"))
+  }
+
   test("J1 vocabulary resolution and F1 null guards") {
     val classif = triples.filter(col("predicate") === (NS.LDTO + "classificatie"))
       .select("objectValue").distinct().collect().map(_.getString(0)).toSet

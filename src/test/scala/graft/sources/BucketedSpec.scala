@@ -1,6 +1,13 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkSuite
 
 /** Proves the bucketed-join claim: joining two tables bucketed+sorted on
@@ -69,8 +76,106 @@ class BucketedSpec extends SparkSuite {
       intercept[IllegalArgumentException] {
         Bucketed.save(df, "bad`tick", Seq("k"), buckets = 2)
       }
+      // the name check runs for every mode, and only Overwrite and
+      // Append are accepted
+      intercept[IllegalArgumentException] {
+        Bucketed.save(df, "a.b.c", Seq("k"), buckets = 2, mode = SaveMode.Append)
+      }
+      intercept[IllegalArgumentException] {
+        Bucketed.save(df, "bad`tick", Seq("k"), buckets = 2, mode = SaveMode.Ignore)
+      }
+      intercept[IllegalArgumentException] {
+        Bucketed.save(df, "graft_bdb.qt", Seq("k"), buckets = 2, mode = SaveMode.Ignore)
+      }
+      assert(Bucketed.load(spark, "graft_bdb.qt").count() == 10)
     } finally {
       spark.sql("DROP DATABASE IF EXISTS graft_bdb CASCADE")
+    }
+  }
+
+  /** Bucket count the frame's file relation carries, as planned. */
+  private def plannedBuckets(df: DataFrame): Option[Int] =
+    df.queryExecution.optimizedPlan.collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.bucketSpec.map(_.numBuckets) }.flatten
+
+  /** Per live data file: does its footer carry a bloom filter on `column`? */
+  private def bloomPerFile(table: String, column: String): Seq[Boolean] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    Bucketed.currentDataFiles(spark, table)._2.map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
+      try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        .filter(_.getPath.toDotString == column)
+        .exists(c => r.readBloomFilter(c) != null)
+      finally r.close()
+    }
+  }
+
+  test("Overwrite replaces a table whose bucket count, column type or writer options differ") {
+    val table = "graft_bucketed_replace"
+    val bloom = Map("parquet.bloom.filter.enabled#u" -> "true",
+      "parquet.bloom.filter.expected.ndv#u" -> "1000")
+    val longRows = (0 until 60).map(i => (i.toLong, s"u$i")).toDF("k", "u")
+    val intRows = (100 until 130).map(i => (i, s"u$i")).toDF("k", "u")
+    // after each Overwrite: exactly the new rows and types, the new bucket
+    // spec in the plan and in the catalog relation, generation 1, and a
+    // compaction that keeps or drops the bloom as the Overwrite asked
+    def replacedBy(rows: DataFrame, buckets: Int, opts: Map[String, String]): Unit = {
+      Bucketed.save(rows, table, Seq("k"), buckets, writeOptions = opts)
+      assert(Bucketed.currentGeneration(spark, table) == 1L)
+      val loaded = Bucketed.load(spark, table)
+      assert(loaded.schema.map(f => f.name -> f.dataType) ==
+        rows.schema.map(f => f.name -> f.dataType))
+      assert(loaded.exceptAll(rows).isEmpty && rows.exceptAll(loaded).isEmpty)
+      assert(plannedBuckets(loaded).contains(buckets))
+      assert(plannedBuckets(spark.table(table)).contains(buckets))
+      assert(Bucketed.compactBuckets(spark, table, maxFilesPerBucket = 0) > 0)
+      val blooms = bloomPerFile(table, "u")
+      assert(blooms.nonEmpty && blooms.forall(_ == opts.nonEmpty),
+        s"bloom per compacted file $blooms, requested ${opts.nonEmpty}")
+    }
+    try {
+      Bucketed.save(longRows, table, Seq("k"), 4, writeOptions = bloom)
+      replacedBy(longRows.filter(col("k") < 30), 8, bloom) // bucket count
+      replacedBy(intRows, 8, bloom)                         // column type
+      replacedBy(intRows, 8, Map.empty)                     // bloom off
+      replacedBy(intRows, 8, bloom)                         // bloom on again
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("create, Overwrite and Append run no CTAS command and no DROP TABLE") {
+    val table = "graft_bucketed_one_path"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        plans.add(qe.analyzed.treeString)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit =
+        plans.add(qe.analyzed.treeString)
+    }
+    val df = (1 to 50).map(i => (s"k$i", i)).toDF("k", "n")
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    spark.listenerManager.register(listener)
+    try {
+      Bucketed.save(df, table, Seq("k"), 4)                 // create
+      Bucketed.save(df, table, Seq("k"), 4)                 // Overwrite, same spec
+      Bucketed.save(df, table, Seq("k"), 2)                 // Overwrite, new spec
+      Bucketed.save(df, table, Seq("k"), 2, mode = SaveMode.Append)
+      assert(Bucketed.load(spark, table).count() == 100)
+      // listener events arrive in order: once this query's plan is seen,
+      // every command the saves ran has been seen too
+      spark.range(1).select(lit("graft_sentinel").as("s")).collect()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!plans.asScala.exists(_.contains("graft_sentinel")) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      assert(plans.asScala.exists(_.contains("graft_sentinel")))
+      val ddl = plans.asScala.filter(p =>
+        p.contains("CreateDataSourceTableAsSelectCommand") ||
+          p.contains("DropTableCommand"))
+      assert(ddl.isEmpty, ddl.mkString("\n"))
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.sql(s"DROP TABLE IF EXISTS $table")
     }
   }
 }
